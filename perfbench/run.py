@@ -222,13 +222,14 @@ def end_to_end(client):
     return {
         "setup_s": (stats.median(client["setup_s"]), "s"),
         "pass_s": (stats.median([p["wall_s"] for p in passes]), "s"),
-        # JIT compilation runs beside the pass for a JVM-dependent while
-        # after warm-up and is not the pass's work, so it is taken out
-        "pass_cpu_s": (stats.median([p["cpu_s"] - p["jit_s"] for p in passes]), "s"),
         "query_s.p50": (stats.median(samples), "s"),
         "shuffle_mb": (mb(stats.median([p["shuffle_write_b"] for p in passes])), "MB"),
         "heap_live_mb": (mb(client["heap_live_b"]), "MB"),
-    }, {"query_s.tail": tail_info, "samples": len(samples), "passes": len(passes)}
+    }, {"query_s.tail": tail_info, "samples": len(samples), "passes": len(passes),
+        # process CPU net of JIT compile time, reported but not gated: on a
+        # 4-core VM about one JVM in five spends ~60% more non-JIT CPU per
+        # pass for its whole life, so its spread over runs exceeds any bound
+        "pass_cpu_s": stats.median([p["cpu_s"] - p["jit_s"] for p in passes])}
 
 
 def per_layer(client, cores):
@@ -368,8 +369,7 @@ def main():
     dataset = gen.ensure(shape, args.seed, sf)
 
     run_id = uuid.uuid4().hex[:12]
-    run_dir = os.path.join(BUILD, "run")
-    shutil.rmtree(run_dir, ignore_errors=True)  # private tmpdir, wiped per run
+    run_dir = os.path.join(BUILD, f"run-{run_id}")  # private tmpdir, removed after the run
     os.makedirs(run_dir)
     nominal = NOMINAL_PASS_S[args.workload]
     passes = max(MIN_PASSES, round(args.seconds / nominal))
@@ -438,6 +438,8 @@ def main():
     if host["heavy_steal"]:
         log(f"WARNING: {steal_share:.0%} of host CPU time was stolen during this run")
     summary = [f"{k}={v:.6g} {u}" for k, (v, u) in metrics.items()]
+    if "pass_cpu_s" in extra:
+        summary.append(f"pass_cpu_s={extra['pass_cpu_s']:.6g} s (not gated)")
     tail = extra.get("query_s.tail")
     if tail:  # reported only when a run has more than ten query samples
         summary.append(f"query_s.tail={tail['value_s']:.6g} s (p{tail['percentile']:.0f} "
