@@ -1,24 +1,22 @@
 """Seeded input generator for the benchmark.
 
-Every table the engine's `Tables` loaders read is written as one
-parquet file per table under a dataset directory, so the program sees
-the same layout as its usual `sfDir` fixtures. The same seed always
-gives byte-identical files.
+Each table a workload's queries read is written under a dataset
+directory as `<table>.parquet`, the path the engine's `Tables` loaders
+read. The same seed always gives byte-identical files.
 
 Two dataset shapes exist:
 
 * `corpus` (the `wordcount` workload): `documents` is a Zipf(s=1.0)
   corpus over a vocabulary of one million words, 20 sources and 3
-  languages, written in many row groups. At this size (under 1 MB)
-  Spark still plans a
-  single scan split; the traced run reports that as
-  `sources.scan_tasks`. The other tables are tiny; they exist only
-  because the oracle registers a view for every table.
-* `star` (the `iterative` workload): the TPC-H-like star schema plus
-  `documents` and `embeddings`, with the same schemas and value
-  distributions as the engine's sf fixtures, at a size where one pass
-  takes seconds rather than minutes (the iterative queries' cost is
-  per Spark job, not per row).
+  languages. It is a directory of many small files with two row
+  groups each: Spark packs a single file this small into one scan
+  split, while many files let the scan run on every core.
+* `star` (the `iterative` workload): `orders` and `lineitem` (the
+  trade graph the BFS fixpoint walks), `embeddings` (the IVF index)
+  and `events` (the streamed day-count sink). The iterative queries'
+  cost is per Spark job, not per row, so the tables are small;
+  `embeddings` has enough rows that the IVF index gets all of its
+  seed centroids.
 """
 import json
 import os
@@ -30,19 +28,19 @@ import pyarrow.parquet as pq
 
 VOCAB = 1_000_000
 ZIPF_S = 1.0
-LANGS3 = ["en", "de", "fr"]
-LANGS5 = ["en", "zh", "es", "fr", "de"]
-LANG5_P = [0.41, 0.15, 0.15, 0.15, 0.14]
-STAR_WORDS = ("a the data spark table column row key value hash sort join group agg "
-              "filter scan window stream batch merge query order part line vector "
-              "index small big fast slow word").split()
+LANGS = ["en", "de", "fr"]
+# The IVF family's seed-centroid rule (SimilarityOps.seedCentroids over
+# the even vec_ids, with the centroidMod and numCentroids the iterative
+# workload passes): vec_id % 2 == 0, vec_id % 98 == 0, vec_id < 98 * 16.
+IVF_CENTROID_MOD = 98
+IVF_CENTROIDS = 16
 
-# Table sizes per dataset shape: documents and token range of the
-# wordcount corpus, row counts of the star schema.
+# Table sizes per dataset shape: documents, token range and files of
+# the corpus; row and key counts of the star tables.
 SHAPES = {
-    "corpus": {"docs": 2_000, "tok_lo": 20, "tok_hi": 140, "row_groups": 32},
-    "star": {"docs": 300, "embeddings": 200, "orders": 3_000, "customers": 300,
-             "suppliers": 30, "parts": 400, "events": 2_000},
+    "corpus": {"docs": 2_000, "tok_lo": 20, "tok_hi": 140, "files": 16},
+    "star": {"embeddings": 2_000, "orders": 3_000, "customers": 300, "suppliers": 30,
+             "parts": 400, "events": 2_000},
 }
 
 
@@ -69,49 +67,44 @@ def _zipf_ids(rng, n, vocab, s):
     return np.searchsorted(cdf, rng.random(n), side="right").clip(0, vocab - 1)
 
 
-def _docs_table(texts, langs, sources):
-    n = len(texts)
-    return pa.table({
-        "doc_id": pa.array(np.arange(n, dtype=np.int64)),
-        "text": pa.array(texts, pa.string()),
-        "lang": pa.array(langs, pa.string()),
-        "source": pa.array(sources, pa.string()),
-        "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
-    })
+def _parquet_files(path):
+    """The parquet files of a table: the file itself, or the part files
+    of a table written as a directory."""
+    if os.path.isdir(path):
+        return sorted(os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet"))
+    return [path]
 
 
-def corpus_documents(seed, out):
-    """Zipf corpus; returns the stats the artifact records."""
+def documents(seed, out):
+    """The Zipf corpus, written as `files` part files of two row groups
+    each; returns the stats the artifact records."""
     sh = SHAPES["corpus"]
     rng = _rng(seed, 2)
     n = sh["docs"]
     lens = rng.integers(sh["tok_lo"], sh["tok_hi"] + 1, n)
     ids = _zipf_ids(rng, int(lens.sum()), VOCAB, ZIPF_S)
-    words = _word_strings(seed)
-    toks = words[ids]
+    toks = _word_strings(seed)[ids]
     bounds = np.concatenate([[0], np.cumsum(lens)])
     texts = [" ".join(toks[bounds[i]:bounds[i + 1]]) for i in range(n)]
-    langs = np.array(LANGS3)[rng.integers(0, 3, n)]
-    sources = np.array([f"src{i % 20}" for i in range(n)])
-    t = _docs_table(texts, langs, sources)
+    t = pa.table({
+        "doc_id": pa.array(np.arange(n, dtype=np.int64)),
+        "text": pa.array(texts, pa.string()),
+        "lang": pa.array(np.array(LANGS)[rng.integers(0, len(LANGS), n)], pa.string()),
+        "source": pa.array([f"src{i % 20}" for i in range(n)], pa.string()),
+        "n_chars": pa.array(np.array([len(x) for x in texts], dtype=np.int64)),
+    })
     path = os.path.join(out, "documents.parquet")
-    pq.write_table(t, path, row_group_size=-(-n // sh["row_groups"]))
-    md = pq.ParquetFile(path).metadata
+    os.makedirs(path)
+    per_file = -(-n // sh["files"])
+    for i in range(sh["files"]):
+        part = t.slice(i * per_file, per_file)
+        pq.write_table(part, os.path.join(path, f"part-{i:05d}.parquet"),
+                       row_group_size=-(-part.num_rows // 2))
+    files = _parquet_files(path)
     return {"tokens": int(lens.sum()), "distinct_words": int(np.unique(ids).size),
-            "vocabulary": VOCAB, "zipf_s": ZIPF_S, "docs": n,
-            "row_groups": md.num_row_groups, "bytes": os.path.getsize(path)}
-
-
-def star_documents(rng, n):
-    lens = rng.integers(10, 101, n)
-    vocab = np.array(STAR_WORDS)
-    texts = [" ".join(vocab[rng.integers(0, len(vocab), k)]) for k in lens]
-    # a few exact copies of earlier documents: the dedup families need them
-    for i in rng.choice(np.arange(n // 2, n), max(2, n // 500), replace=False):
-        texts[i] = texts[int(rng.integers(0, n // 2))]
-    langs = np.array(LANGS5)[rng.choice(5, n, p=LANG5_P)]
-    sources = np.array([f"src{i % 20}" for i in range(n)])
-    return _docs_table(texts, langs, sources)
+            "vocabulary": VOCAB, "zipf_s": ZIPF_S, "docs": n, "files": len(files),
+            "row_groups": sum(pq.ParquetFile(f).metadata.num_row_groups for f in files),
+            "bytes": sum(os.path.getsize(f) for f in files)}
 
 
 def embeddings(rng, n, dim=64, labels=10):
@@ -132,37 +125,12 @@ def _days(rng, n, start, span_days):
     return base + (rng.integers(0, span_days + 1, n) * 86_400_000_000).astype("timedelta64[us]")
 
 
-def star_tables(seed, sh):
+def orders_lineitem(seed, sh):
+    """`orders` and `lineitem` in the engine's schemas; four line items
+    per order on average, over `customers`, `suppliers` and `parts`
+    keys."""
     rng = _rng(seed, 3)
     nc, ns, npt, no = sh["customers"], sh["suppliers"], sh["parts"], sh["orders"]
-    region = pa.table({"r_regionkey": pa.array(np.arange(5, dtype=np.int32)),
-                       "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]})
-    nation = pa.table({"n_nationkey": pa.array(np.arange(25, dtype=np.int32)),
-                       "n_name": [f"NATION_{i}" for i in range(25)],
-                       "n_regionkey": pa.array((np.arange(25) % 5).astype(np.int32))})
-    segs = np.array(["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"])
-    customer = pa.table({
-        "c_custkey": pa.array(np.arange(nc, dtype=np.int64)),
-        "c_name": [f"Customer#{i:09d}" for i in range(nc)],
-        "c_nationkey": pa.array(rng.integers(0, 25, nc).astype(np.int32)),
-        "c_acctbal": pa.array(np.round(rng.uniform(-999.99, 9999.99, nc), 2)),
-        "c_mktsegment": pa.array(segs[rng.integers(0, 5, nc)])})
-    supplier = pa.table({
-        "s_suppkey": pa.array(np.arange(ns, dtype=np.int64)),
-        "s_name": [f"Supplier#{i:09d}" for i in range(ns)],
-        "s_nationkey": pa.array(rng.integers(0, 25, ns).astype(np.int32)),
-        "s_acctbal": pa.array(np.round(rng.uniform(-999.99, 9999.99, ns), 2))})
-    adj = np.array(["large", "small", "hot", "cold", "shiny", "matte"])
-    noun = np.array(["ring", "bolt", "nut", "gear", "pipe", "valve"])
-    types = np.array(["LARGE", "SMALL", "ECONOMY", "STANDARD", "PROMO"])
-    part = pa.table({
-        "p_partkey": pa.array(np.arange(npt, dtype=np.int64)),
-        "p_name": pa.array(np.char.add(np.char.add(adj[rng.integers(0, 6, npt)], " "),
-                                       noun[rng.integers(0, 6, npt)])),
-        "p_brand": pa.array(np.char.add("Brand#", rng.integers(1, 26, npt).astype(str))),
-        "p_type": pa.array(types[rng.integers(0, 5, npt)]),
-        "p_size": pa.array(rng.integers(1, 51, npt).astype(np.int32)),
-        "p_retailprice": pa.array(np.round(900 + np.arange(npt) % 20001 * 0.1, 2))})
     prio = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
     orders = pa.table({
         "o_orderkey": pa.array(np.arange(no, dtype=np.int64)),
@@ -184,46 +152,53 @@ def star_tables(seed, sh):
         "l_returnflag": pa.array(np.array(["N", "R", "A"])[rng.integers(0, 3, nl)]),
         "l_linestatus": pa.array(np.array(["F", "O"])[rng.integers(0, 2, nl)]),
         "l_shipdate": pa.array(_days(rng, nl, "1995-01-02", 2498))})
-    ne = sh["events"]
-    secs = np.sort(rng.integers(0, 30 * 86_400_000_000, ne))
-    events = pa.table({
-        "event_id": pa.array(np.arange(ne, dtype=np.int64)),
-        "ts": pa.array(np.datetime64("2024-01-01", "us") + secs.astype("timedelta64[us]")),
-        "user_id": pa.array(rng.integers(0, max(1, ne // 66), ne)),
+    return {"orders": orders, "lineitem": lineitem}
+
+
+def events(seed, n):
+    """`events` in the engine's schema: `n` events over 30 days."""
+    rng = _rng(seed, 5)
+    us = np.sort(rng.integers(0, 30 * 86_400_000_000, n))
+    return pa.table({
+        "event_id": pa.array(np.arange(n, dtype=np.int64)),
+        "ts": pa.array(np.datetime64("2024-01-01", "us") + us.astype("timedelta64[us]")),
+        "user_id": pa.array(rng.integers(0, max(1, n // 66), n)),
         "event_type": pa.array(np.array(["signup", "purchase", "view", "click", "error"])
-                               [rng.integers(0, 5, ne)]),
-        "value": pa.array(np.round(rng.uniform(0, 200, ne), 2)),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, ne)])})
-    return {"region": region, "nation": nation, "customer": customer,
-            "supplier": supplier, "part": part, "orders": orders,
-            "lineitem": lineitem, "events": events}
+                               [rng.integers(0, 5, n)]),
+        "value": pa.array(np.round(rng.uniform(0, 200, n), 2)),
+        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n)])})
+
+
+def ivf_seed_ids(vec_ids):
+    """The vec_ids the IVF family seeds its centroids from."""
+    v = np.asarray(vec_ids)
+    return v[(v % 2 == 0) & (v % IVF_CENTROID_MOD == 0) & (v < IVF_CENTROID_MOD * IVF_CENTROIDS)]
 
 
 def generate(shape, seed, out):
     """Write the `shape` dataset for `seed` into `out` (replaced if it
     exists) and return its description for the artifact."""
+    if shape not in SHAPES:
+        raise ValueError(f"unknown dataset shape {shape!r}")
     tmp = out + ".partial"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
+    info = {"shape": shape, "seed": seed}
     if shape == "corpus":
-        info = {"shape": shape, "seed": seed, "documents": corpus_documents(seed, tmp)}
-        small = dict(SHAPES["star"], orders=200, customers=20, suppliers=5, parts=20,
-                     events=100)
-        tables = star_tables(seed, small)
-        tables["embeddings"] = embeddings(_rng(seed, 4), 20)
-    elif shape == "star":
-        sh = SHAPES["star"]
-        tables = star_tables(seed, sh)
-        tables["documents"] = star_documents(_rng(seed, 5), sh["docs"])
-        tables["embeddings"] = embeddings(_rng(seed, 4), sh["embeddings"])
-        info = {"shape": shape, "seed": seed}
+        info["documents"] = documents(seed, tmp)
     else:
-        raise ValueError(f"unknown dataset shape {shape!r}")
-    for name, t in tables.items():
-        pq.write_table(t, os.path.join(tmp, f"{name}.parquet"))
-    info["tables"] = {f[:-8]: {"rows": pq.ParquetFile(os.path.join(tmp, f)).metadata.num_rows,
-                               "bytes": os.path.getsize(os.path.join(tmp, f))}
-                      for f in sorted(os.listdir(tmp))}
+        sh = SHAPES["star"]
+        tables = orders_lineitem(seed, sh)
+        tables["embeddings"] = embeddings(_rng(seed, 4), sh["embeddings"])
+        tables["events"] = events(seed, sh["events"])
+        for name, t in tables.items():
+            pq.write_table(t, os.path.join(tmp, f"{name}.parquet"))
+    info["tables"] = {}
+    for f in sorted(os.listdir(tmp)):
+        files = _parquet_files(os.path.join(tmp, f))
+        info["tables"][f[:-len(".parquet")]] = {
+            "rows": sum(pq.ParquetFile(p).metadata.num_rows for p in files),
+            "bytes": sum(os.path.getsize(p) for p in files)}
     with open(os.path.join(tmp, "_dataset.json"), "w") as f:
         json.dump(info, f, indent=1, sort_keys=True)
     shutil.rmtree(out, ignore_errors=True)
@@ -238,4 +213,3 @@ def ensure(shape, seed, out):
         with open(meta) as f:
             return json.load(f)
     return generate(shape, seed, out)
-

@@ -27,6 +27,7 @@ package graft.perfbench {
   import org.apache.spark.scheduler._
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.streaming.StreamingQueryListener
   import org.apache.spark.storage.RDDBlockId
 
   import graft.{Queries, Tables}
@@ -120,6 +121,21 @@ package graft.perfbench {
       }.asJava
   }
 
+  /** Streaming listener: in a traced pass it keeps each micro-batch's
+    * trigger start (epoch ms), trigger wall time (ms) and input rows. */
+  final class StreamRecorder(recorder: Recorder) extends StreamingQueryListener {
+    val batches = new ConcurrentLinkedQueue[Array[Double]]()
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      if (recorder.traced) {
+        val p = e.progress
+        batches.add(Array(java.time.Instant.parse(p.timestamp).toEpochMilli.toDouble,
+          Option(p.durationMs.get("triggerExecution")).map(_.doubleValue).getOrElse(0.0),
+          p.numInputRows.toDouble))
+      }
+  }
+
   /** One persisted index family: the query that builds and probes it,
     * the index dir (through the program's public accessor), its
     * compaction, and a re-probe of the compacted index that must answer
@@ -150,11 +166,13 @@ package graft.perfbench {
         Seq("documents"),
         // the raw-text fixture is written by the query function itself
         Seq((s, d) => Queries.queries("wordcount_textscan")(s, d))),
-      // driver-bound loops next to index maintenance: the trade-graph
-      // BFS fixpoint, then the IVF index built, upserted, tombstoned,
-      // compacted and re-probed from wiped fixture dirs every pass
+      // driver-bound loops next to index maintenance and a stream: the
+      // trade-graph BFS fixpoint, the IVF index built, upserted,
+      // tombstoned, compacted and re-probed, and the events streamed
+      // into a day-partitioned sink, from wiped fixture dirs every pass
       "iterative" -> Workload(
-        Seq("bfs_hops_fixpoint", "ann_ivf_delete"), Seq("orders", "lineitem", "embeddings"), Nil,
+        Seq("bfs_hops_fixpoint", "ann_ivf_delete", "streamed_day_counts"),
+        Seq("orders", "lineitem", "embeddings", "events"), Nil,
         Seq(Family("ivf", "ann_ivf_delete",
           (s, d) => SimilarityOps.ivfDeleteIndexDir(emb(s, d), d, 98, 16, 1, 0.0),
           SimilarityOps.compactIvfLists,
@@ -167,6 +185,7 @@ package graft.perfbench {
     private val spans = ArrayBuffer[Span]()
     private var spark: SparkSession = _
     private var recorder: Recorder = _
+    private var streams: StreamRecorder = _
     private val wallAnchorMs = System.currentTimeMillis().toDouble
     private val nanoAnchor = System.nanoTime()
     private def nowMs: Double = wallAnchorMs + (System.nanoTime() - nanoAnchor) / 1e6
@@ -176,6 +195,9 @@ package graft.perfbench {
     // time the JIT compiler threads spent compiling, summed over threads
     private val jitBean = ManagementFactory.getCompilationMXBean
     private def jitS: Double = jitBean.getTotalCompilationTime / 1e3
+    // time the collectors spent collecting, summed over collectors
+    private val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala.toSeq
+    private def gcS: Double = gcBeans.map(_.getCollectionTime).sum / 1e3
 
     private var tracing = false
 
@@ -277,11 +299,14 @@ package graft.perfbench {
       var wall = 0.0
       var cpu = 0.0
       var jit = 0.0
+      var gc = 0.0
       // cleanup between queries is not timed
       def timed[T](body: => T): T = {
         cleanBetweenQueries()
-        val (w0, c0, j0) = (nowMs, cpuS, jitS)
-        try body finally { wall += (nowMs - w0) / 1e3; cpu += cpuS - c0; jit += jitS - j0 }
+        val (w0, c0, j0, g0) = (nowMs, cpuS, jitS, gcS)
+        try body finally {
+          wall += (nowMs - w0) / 1e3; cpu += cpuS - c0; jit += jitS - j0; gc += gcS - g0
+        }
       }
       def check(what: String, h: String, expected: Option[String]): Unit =
         if (expected.exists(_ != h))
@@ -345,6 +370,7 @@ package graft.perfbench {
       out.put("wall_s", wall)
       out.put("cpu_s", cpu)
       out.put("jit_s", jit)
+      out.put("gc_s", gc)
       out.put("shuffle_write_b", recorder.shuffleWritten.get() - shuffle0)
       out.put("samples", samples)
       out.put("index", index)
@@ -370,7 +396,7 @@ package graft.perfbench {
 
     def main(args: Array[String]): Unit = {
       val opts = args.grouped(2).map(a => a(0).stripPrefix("--") -> a(1)).toMap
-      if (opts.get("mode").contains("selftest")) { selfTest(); return }
+      if (opts.get("mode").contains("selftest")) { selfTest(opts); return }
       val w = Workloads(opts("workload"))
       val sf = opts("sf")
       val passes = opts("passes").toInt
@@ -382,32 +408,35 @@ package graft.perfbench {
       val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime.toDouble
       val failures = ArrayBuffer[String]()
 
-      // set-up, repeated: a fresh session, the workload's tables read
-      // once, and its write-once fixtures built
-      val setupS = ArrayBuffer[Double]()
+      recorder = new Recorder
+      streams = new StreamRecorder(recorder)
+      // set-up: a fresh session with the listeners, the workload's
+      // tables read once, and its write-once fixtures built
       val setupPhases = new java.util.ArrayList[java.util.Map[String, Double]]()
-      (0 until setups).foreach { i =>
-        val t0 = if (i == 0) jvmStartMs else nowMs
-        if (i > 0) { spark.stop(); fixtureDirs.foreach(rm) }
+      def setUp(t0: Double): Double = {
+        if (spark != null) { spark.stop(); fixtureDirs.foreach(rm) }
         spark = session(cores)
+        spark.sparkContext.addSparkListener(recorder)
+        spark.streams.addListener(streams)
         val t1 = nowMs
         w.tables.foreach(t => Tables.load(spark, sf, t).count())
         val t2 = nowMs
         w.fixtures.foreach(_(spark, sf))
-        setupS += (nowMs - t0) / 1e3
         setupPhases.add(Map("session_s" -> (t1 - t0) / 1e3, "tables_s" -> (t2 - t1) / 1e3,
           "fixtures_s" -> (nowMs - t2) / 1e3).asJava)
+        (nowMs - t0) / 1e3
       }
-      recorder = new Recorder
-      spark.sparkContext.addSparkListener(recorder)
 
-      // untimed passes: the first writes the results the oracle is
+      // the cold path, from JVM start to the first timed pass: set-up,
+      // then untimed passes. The first writes the results the oracle is
       // compared with, and its hashes are the reference; the others let
-      // JIT compilation settle before timing
+      // JIT compilation settle
+      setUp(jvmStartMs)
       val warm0 = nowMs
       val (_, reference) = runPass(w, sf, -1, traced = false, Some(dump), Map.empty, failures)
       (1 to warmPasses).foreach(i => runPass(w, sf, -1 - i, traced = false, None, reference, failures))
       val warmS = (nowMs - warm0) / 1e3
+      val coldS = (nowMs - jvmStartMs) / 1e3
       val oracle = new java.util.TreeMap[String, String]()
       w.queries.filter(q => Queries.oracleSql.contains(q) && reference.contains(q))
         .foreach(q => oracle.put(q, Queries.oracleSql(q)))
@@ -422,26 +451,16 @@ package graft.perfbench {
         val tracedPass = traced && p % 2 == 1
         val (out, _) = runPass(w, sf, p, tracedPass, None, reference, failures)
         passOut.add(out)
-        if (tracedPass) tokenize.add(tokenizeProbe(sf, p))
+        if (tracedPass && w.tables.contains("documents")) tokenize.add(tokenizeProbe(sf, p))
       }
+      recorder.traced = false
+      tracing = false
 
       // heap still live after a full GC, with whatever the passes left
       System.gc(); System.gc()
       val heapLive = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
 
       val out = new java.util.LinkedHashMap[String, Any]()
-      out.put("cores", cores)
-      out.put("heap_max_b", Runtime.getRuntime.maxMemory)
-      out.put("jvm", s"${sys.props("java.vm.name")} ${sys.props("java.version")}")
-      out.put("spark", spark.version)
-      out.put("setup_s", setupS.asJava)
-      out.put("setup_phases", setupPhases)
-      out.put("warm_pass_s", warmS)
-      out.put("heap_live_b", heapLive)
-      out.put("input_b", w.tables.map(t => new File(s"$sf/$t.parquet").length).sum)
-      out.put("passes", passOut)
-      out.put("failures", failures.asJava)
-      out.put("attempted", (passes + 1 + warmPasses) * (w.queries.size + w.families.size))
       if (traced) {
         if (w.queries.contains("wordcount")) {
           // the simulated counterpart of shuffle_mb, read from its row
@@ -462,22 +481,44 @@ package graft.perfbench {
         out.put("jobs", recorder.jobs.asScala.toSeq.map(_.asJava).asJava)
         out.put("stages", recorder.stageTable)
         out.put("blocks", recorder.blocks.asScala.map(_.toSeq.asJava).toSeq.asJava)
+        out.put("stream_batches", streams.batches.asScala.map(_.toSeq.asJava).toSeq.asJava)
         out.put("tokenize", tokenize)
       }
+      out.put("spark", spark.version)
+
+      // set-up repeated last, in the fully warmed JVM, each from a
+      // stopped session and wiped fixtures; setup_s is their median
+      val setupS = (0 until setups).map(_ => setUp(nowMs))
+
+      out.put("cores", cores)
+      out.put("heap_max_b", Runtime.getRuntime.maxMemory)
+      out.put("jvm", s"${sys.props("java.vm.name")} ${sys.props("java.version")}")
+      out.put("setup_s", setupS.asJava)
+      out.put("setup_cold_s", coldS)
+      out.put("setup_phases", setupPhases)
+      out.put("warm_pass_s", warmS)
+      out.put("heap_live_b", heapLive)
+      out.put("input_b", treeStats(w.tables.map(t => new File(s"$sf/$t.parquet")))._2)
+      out.put("passes", passOut)
+      out.put("failures", failures.asJava)
+      out.put("attempted", (passes + 1 + warmPasses) * (w.queries.size + w.families.size))
       mapper.writerWithDefaultPrettyPrinter().writeValue(new File(opts("out")), out)
       spark.stop()
     }
 
-    /** The result hash must not depend on row order or partitioning. */
-    private def selfTest(): Unit = {
-      spark = session(2)
+    /** The result hash must not depend on row order or partitioning.
+      * With `--sf`, also reports how many splits the program's scan of
+      * that dataset's `documents` has on `--cores` cores. */
+    private def selfTest(opts: Map[String, String]): Unit = {
+      spark = session(opts.get("cores").map(_.toInt).getOrElse(2))
       val df = spark.range(0, 5000).select(col("id"), (col("id") % 7).as("k"),
         concat(lit("w"), (col("id") * 31 % 101).cast("string")).as("s"),
         array(col("id").cast("float"), lit(1.5f)).as("v"))
       val a = hashString(resultHash(df))
       val b = hashString(resultHash(df.orderBy(rand(3)).repartition(7)))
       val c = hashString(resultHash(df.where(col("id") =!= 17)))
-      println(s"""{"ordered":"$a","shuffled":"$b","one_row_less":"$c"}""")
+      val splits = opts.get("sf").map(Tables.documents(spark, _).rdd.getNumPartitions).getOrElse(0)
+      println(s"""{"ordered":"$a","shuffled":"$b","one_row_less":"$c","scan_splits":$splits}""")
       spark.stop()
     }
   }

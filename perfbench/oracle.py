@@ -5,11 +5,10 @@ by every column, floats compared exactly, every other value compared
 by its string form, and NULL equal only to NULL. It is vectorized here
 because check.py's per-cell loop takes longer than a benchmark run.
 """
+import os
+
 import duckdb
 import pandas as pd
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 
 def _normalized(df):
@@ -43,6 +42,12 @@ def mismatch(got, exp):
 def check(sf, dump, oracle_sql, threads, spill):
     """Compare every dumped result with its oracle SQL; returns
     {query: reason} for the queries that do not match."""
+    views = []
+    for f in sorted(os.listdir(sf)):
+        if f.endswith(".parquet"):  # a file, or a directory of part files
+            src = os.path.join(sf, f, "*.parquet") if os.path.isdir(os.path.join(sf, f)) \
+                else os.path.join(sf, f)
+            views.append(f"CREATE VIEW {f[:-len('.parquet')]} AS FROM read_parquet('{src}')")
     bad = {}
     for name, sql in sorted(oracle_sql.items()):
         con = duckdb.connect()
@@ -51,8 +56,8 @@ def check(sf, dump, oracle_sql, threads, spill):
             con.execute("SET memory_limit='2GB'")
             con.execute(f"SET temp_directory='{spill}'")
             con.execute("SET preserve_insertion_order=false")
-            for t in TABLES:
-                con.execute(f"CREATE VIEW {t} AS FROM read_parquet('{sf}/{t}.parquet')")
+            for v in views:
+                con.execute(v)
             got = con.execute(f"FROM read_parquet('{dump}/{name}/*.parquet')").fetchdf()
             reason = mismatch(got, con.execute(sql).fetchdf())
         except Exception as e:  # an oracle or read error is a failed check

@@ -9,7 +9,8 @@ client (perfbench/harness) from source into .bench_build/, generates
 the workload's inputs from the seed (cached per seed), runs the client
 in one JVM as local[nproc] with spark.sql.shuffle.partitions = nproc,
 checks every result against the DuckDB oracle (perfbench/oracle.py, with
-tools/check.py's normalization), and prints one JSON object as the last line of standard output. With
+tools/check.py's normalization), and prints one JSON object as the last
+line of standard output. With
 --trace 0 it reports the end-to-end metrics, with --trace 1 the
 per-layer metrics of a traced run. Everything it writes stays under
 .bench_build/; the full artifact of each run lands in
@@ -20,10 +21,18 @@ Workloads (one client thread issues the queries back to back):
              tokenize, partial aggregate and shuffle; no loops, no index
              writes. A traced run also reads the coded-shuffle
              simulation's packet counts.
-  iterative  driver-bound work over a seeded star schema: the trade-graph
-             BFS fixpoint, then the IVF index built, upserted,
-             tombstoned, compacted and re-probed, every pass starting
-             from wiped fixture dirs.
+  iterative  driver-bound work over seeded orders, lineitem, embeddings
+             and events tables: the trade-graph BFS fixpoint, the IVF
+             index built, upserted, tombstoned, compacted and
+             re-probed, and the events streamed into a day-partitioned
+             sink, every pass starting from wiped fixture dirs.
+
+setup_s is the median of several set-ups (a fresh session, the
+workload's tables read once, its write-once fixtures built), repeated
+after the timed passes in the warmed JVM. The cold path, from JVM start
+through set-up and the untimed passes to the first timed pass, is
+printed and stored as setup_cold_s but not gated: JIT compilation and
+host load make it vary too much from run to run.
 """
 import argparse
 import fcntl
@@ -49,15 +58,19 @@ BUILD = os.path.join(ROOT, ".bench_build")
 WORKLOADS = {"wordcount": "corpus", "iterative": "star"}
 # Wall time of one pass on a 4-core host. A run measures
 # max(MIN_PASSES, round(seconds / this)) passes, so the amount of
-# measured work is fixed by --seconds, not by how fast the host is. The
-# median over passes drops the first one's JIT tail; before timing,
-# untimed passes worth about WARM_S seconds (after the one that writes
-# the oracle dump) let JIT compilation settle.
-NOMINAL_PASS_S = {"wordcount": 2.5, "iterative": 9.0}
+# measured work is fixed by --seconds, not by how fast the host is.
+# Before timing, untimed passes worth about WARM_S seconds, and at least
+# one, after the one that writes the oracle dump, let JIT compilation
+# settle: the first pass after the dump still runs partly interpreted.
+NOMINAL_PASS_S = {"wordcount": 2.5, "iterative": 12.0}
 MIN_PASSES = 3
 WARM_S = 5.0
-SETUPS = 3  # set-up is repeated this many times; setup_s is the median
-HEAP = "3g"
+SETUPS = 5  # warm set-ups per run; setup_s is their median
+# Fixed heap size (-Xms = -Xmx). A heap grown on demand stays small,
+# near G1's initiating occupancy, so most humongous allocations start a
+# concurrent cycle (250-450 per iterative run, more in some JVMs than
+# others), and pass times split into a fast and a slow mode.
+HEAP = "2g"
 STEAL_FLAG = 0.10  # share of host CPU time stolen above which a run is flagged
 JVM_TIMEOUT_S = 165
 # JVM flags for the client: no hsperfdata file outside the checkout,
@@ -175,7 +188,7 @@ def run_client(classes, jars, args, workload, sf, passes, warm, run_dir):
     out = os.path.join(run_dir, "client.json")
     os.makedirs(tmp)
     cmd = (["java"] + JVM_FLAGS +
-           [f"-Xmx{HEAP}", f"-Djava.io.tmpdir={tmp}",
+           [f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Djava.io.tmpdir={tmp}",
             f"-Dspark.local.dir={os.path.join(tmp, 'spark-local')}",
             "-cp", f"{classes}:{os.path.join(jars, '*')}", "graft.perfbench.Harness",
             "--workload", workload, "--sf", sf, "--passes", str(passes),
@@ -222,14 +235,13 @@ def end_to_end(client):
     return {
         "setup_s": (stats.median(client["setup_s"]), "s"),
         "pass_s": (stats.median([p["wall_s"] for p in passes]), "s"),
+        # process CPU net of JIT compile time: wall time inflates with host
+        # steal, CPU time does not
+        "pass_cpu_s": (stats.median([p["cpu_s"] - p["jit_s"] for p in passes]), "s"),
         "query_s.p50": (stats.median(samples), "s"),
         "shuffle_mb": (mb(stats.median([p["shuffle_write_b"] for p in passes])), "MB"),
         "heap_live_mb": (mb(client["heap_live_b"]), "MB"),
-    }, {"query_s.tail": tail_info, "samples": len(samples), "passes": len(passes),
-        # process CPU net of JIT compile time, reported but not gated: on a
-        # 4-core VM about one JVM in five spends ~60% more non-JIT CPU per
-        # pass for its whole life, so its spread over runs exceeds any bound
-        "pass_cpu_s": stats.median([p["cpu_s"] - p["jit_s"] for p in passes])}
+    }, {"query_s.tail": tail_info, "samples": len(samples), "passes": len(passes)}
 
 
 def per_layer(client, cores):
@@ -273,6 +285,7 @@ def per_layer(client, cores):
         tok = next((t for t in client["tokenize"] if t["pass"] == n), None)
         shuffle_rec = ssum("shuffle_write_rec")
         blocks = sum(b[1] for b in client["blocks"] if t0 <= b[0] <= t1)
+        batches = [b for b in client["stream_batches"] if t0 <= b[0] <= t1]
         index = p["index"]
         m = {
             "queries.build_s": span_s("build"),
@@ -314,6 +327,9 @@ def per_layer(client, cores):
             "index.reprobe_s": span_s("reprobe"),
             "index.files": sum(i["files"] for i in index),
             "index.bytes_per_input_byte": sum(i["bytes"] for i in index) / client["input_b"],
+            "streaming.batches": len(batches),
+            "streaming.batch_s": sum(b[1] for b in batches) / 1e3,
+            "streaming.rows": sum(b[2] for b in batches),
         }
         per.append(m)
     out = {k: (stats.median([m[k] for m in per]), UNITS[k]) for k in UNITS if k in per[0]}
@@ -351,6 +367,7 @@ UNITS = {
     "materialize.block_mb": "MB", "materialize.write_mb": "MB", "materialize.scratch_mb": "MB",
     "index.compact_s": "s", "index.reprobe_s": "s", "index.files": "count",
     "index.bytes_per_input_byte": "ratio",
+    "streaming.batches": "count", "streaming.batch_s": "s", "streaming.rows": "count",
 }
 
 
@@ -365,7 +382,9 @@ def main():
     jars = spark_jars()
     classes = build(jars)
     shape = WORKLOADS[args.workload]
-    sf = os.path.join(BUILD, "data", f"{shape}-{args.seed}")
+    with open(gen.__file__, "rb") as f:  # a changed generator gets fresh data
+        gen_key = hashlib.sha256(f.read()).hexdigest()[:12]
+    sf = os.path.join(BUILD, "data", f"{shape}-{args.seed}-{gen_key}")
     dataset = gen.ensure(shape, args.seed, sf)
 
     run_id = uuid.uuid4().hex[:12]
@@ -375,7 +394,7 @@ def main():
     passes = max(MIN_PASSES, round(args.seconds / nominal))
     if args.trace:  # half the passes untraced, interleaved, for trace.overhead_s
         passes = 2 * math.ceil(passes / 2)
-    warm = int(WARM_S // nominal)
+    warm = max(1, int(WARM_S // nominal))
 
     lock, lock_state = hold_heavy_lock()
     load_start, (tot0, steal0) = load1(), cpu_times()
@@ -416,12 +435,13 @@ def main():
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "host": host, "dataset": dataset,
         "setup_runs_s": client["setup_s"], "setup_phases": client["setup_phases"],
+        "setup_cold_s": client["setup_cold_s"],
         "warm_pass_s": client["warm_pass_s"], "oracle_s": oracle_s, "failures": failures,
         "failed_frac": failed / attempted, "attempted": attempted,
         "oracle_checked": checked,
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},
         **extra,
-        "passes": [{k: p[k] for k in ("pass", "traced", "wall_s", "cpu_s", "jit_s",
+        "passes": [{k: p[k] for k in ("pass", "traced", "wall_s", "cpu_s", "jit_s", "gc_s",
                                       "shuffle_write_b")}
                    | {"latency_s": {s["query"]: s["latency_s"] for s in p["samples"]}}
                    for p in client["passes"]],
@@ -438,8 +458,7 @@ def main():
     if host["heavy_steal"]:
         log(f"WARNING: {steal_share:.0%} of host CPU time was stolen during this run")
     summary = [f"{k}={v:.6g} {u}" for k, (v, u) in metrics.items()]
-    if "pass_cpu_s" in extra:
-        summary.append(f"pass_cpu_s={extra['pass_cpu_s']:.6g} s (not gated)")
+    summary.append(f"setup_cold_s={client['setup_cold_s']:.6g} s (not gated)")
     tail = extra.get("query_s.tail")
     if tail:  # reported only when a run has more than ten query samples
         summary.append(f"query_s.tail={tail['value_s']:.6g} s (p{tail['percentile']:.0f} "

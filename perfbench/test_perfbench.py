@@ -12,6 +12,8 @@ import unittest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
+import pyarrow.parquet as pq  # noqa: E402
+
 import gen  # noqa: E402
 import oracle  # noqa: E402
 import stats  # noqa: E402
@@ -19,10 +21,13 @@ import stats  # noqa: E402
 
 def digest(d):
     h = hashlib.sha256()
-    for name in sorted(os.listdir(d)):
-        h.update(name.encode())
-        with open(os.path.join(d, name), "rb") as f:
-            h.update(f.read())
+    for root, dirs, files in os.walk(d):
+        dirs.sort()
+        for name in sorted(files):
+            p = os.path.join(root, name)
+            h.update(os.path.relpath(p, d).encode())
+            with open(p, "rb") as f:
+                h.update(f.read())
     return h.hexdigest()
 
 
@@ -36,15 +41,21 @@ class GeneratorTest(unittest.TestCase):
                 gen.generate(shape, 12, c)
                 self.assertEqual(digest(a), digest(b), shape)
                 self.assertNotEqual(digest(a), digest(c), shape)
-                self.assertEqual(info["tables"]["documents"]["rows"],
-                                 gen.SHAPES[shape]["docs"])
+                self.assertGreater(min(x["rows"] for x in info["tables"].values()), 0)
 
     def test_corpus_layout(self):
         with tempfile.TemporaryDirectory() as t:
             info = gen.generate("corpus", 3, os.path.join(t, "c"))["documents"]
-            self.assertEqual(info["row_groups"], gen.SHAPES["corpus"]["row_groups"])
+            self.assertEqual(info["files"], gen.SHAPES["corpus"]["files"])
+            self.assertEqual(info["row_groups"], 2 * gen.SHAPES["corpus"]["files"])
             self.assertGreater(info["distinct_words"], 1000)
             self.assertEqual(info["zipf_s"], 1.0)
+
+    def test_star_has_every_ivf_seed_centroid(self):
+        with tempfile.TemporaryDirectory() as t:
+            gen.generate("star", 3, os.path.join(t, "s"))
+            ids = pq.read_table(os.path.join(t, "s", "embeddings.parquet"))["vec_id"]
+        self.assertEqual(len(gen.ivf_seed_ids(ids.to_numpy())), gen.IVF_CENTROIDS)
 
 
 class TailTest(unittest.TestCase):
@@ -86,21 +97,31 @@ class OracleCompareTest(unittest.TestCase):
         self.assertIn("column f", oracle.mismatch(a, c))
 
 
-class ResultHashTest(unittest.TestCase):
-    """The Spark-side result hash ignores row order and partitioning but
-    sees a missing row. Needs the program built, as run.py builds it."""
+class HarnessSelfTest(unittest.TestCase):
+    """Checks run inside the client JVM. Needs the program built, as
+    run.py builds it."""
 
-    def test_order_independent(self):
+    def test_result_hash_and_corpus_scan(self):
         import run
         jars = run.spark_jars()
         classes = run.build(jars)
-        out = subprocess.run(
-            ["java"] + run.JVM_FLAGS + ["-Xmx1g", "-cp", f"{classes}:{os.path.join(jars, '*')}",
-                                        "graft.perfbench.Harness", "--mode", "selftest"],
-            capture_output=True, text=True, timeout=170, check=True)
+        cores = os.cpu_count() or 1
+        with tempfile.TemporaryDirectory() as t:
+            sf = os.path.join(t, "c")
+            gen.generate("corpus", 5, sf)
+            out = subprocess.run(
+                ["java"] + run.JVM_FLAGS +
+                ["-Xmx1g", f"-Djava.io.tmpdir={t}", "-cp", f"{classes}:{os.path.join(jars, '*')}",
+                 "graft.perfbench.Harness", "--mode", "selftest", "--sf", sf,
+                 "--cores", str(cores)],
+                capture_output=True, text=True, timeout=170, check=True)
         r = json.loads(out.stdout.strip().splitlines()[-1])
+        # the result hash ignores row order and partitioning but sees a
+        # missing row
         self.assertEqual(r["ordered"], r["shuffled"])
         self.assertNotEqual(r["ordered"], r["one_row_less"])
+        # the wordcount corpus is not scanned as one split
+        self.assertGreaterEqual(r["scan_splits"], min(2, cores))
 
 
 if __name__ == "__main__":
